@@ -15,13 +15,20 @@ PIPELINE_GATES = (
     "dedup_neardup", "lang_filter", "split",
 )
 
+#: Endpoints of the serve mix, for the per-endpoint CPU metrics.
+SERVE_ENDPOINTS = ("compare", "dashboard", "facets", "page", "question", "stats", "suggest")
+#: Streaming maintainers a curate pass drains.
+MAINTAINERS = ("readability",)
+
 #: End-to-end metrics, reported by every workload (``--trace 0``).  The
 #: cost of a unit of work (a request, a pass) is the CPU time of the whole
 #: process tree, averaged over whole request cycles: on a shared host the
 #: wall time of the same run varies up to 2x with the CPU other guests
 #: take (steal), and the median of 10-20 requests from a mix of cheap and
 #: dear endpoints jumps between them.  Wall-clock latencies, the
-#: median and p90 included, are in the ``info`` line.  Memory is the
+#: median and p90 included, are in the ``info`` line, unbounded: a change
+#: that only adds waiting or loses parallelism, at the same CPU time,
+#: passes the bounds.  Memory is the
 #: tree's PSS: summed RSS counted pages shared with forked Python workers
 #: once per worker and jumped with their number.
 END_TO_END: dict[str, str] = {
@@ -54,6 +61,14 @@ LAYER_METRICS: dict[str, str] = {
     "ml.lsh_precision": "ratio",
     "ml.neardup_recall": "ratio",
     **{f"pipeline.stage_rows.{g}": "count" for g in PIPELINE_GATES},
+    **{f"serving.cpu_ms.{e}": "ms" for e in SERVE_ENDPOINTS},
+    **{f"streaming.fold_ms.{m}": "ms" for m in MAINTAINERS},
+    "streaming.rows_in": "count",
+    **{f"streaming.state_rows.{m}": "count" for m in MAINTAINERS},
+    "streaming.add_batch_ms": "ms",
+    "streaming.query_planning_ms": "ms",
+    "streaming.wal_commit_ms": "ms",
+    "streaming.fold_growth": "ratio",
     "operators.cache_bytes": "bytes",
     "catalog.load_ms": "ms",
     "trace.overhead_ms": "ms",
@@ -98,6 +113,8 @@ class Op:
     end: float = 0.0
     cpu_start: float = 0.0
     cpu_end: float = 0.0
+    jit_start: float = 0.0
+    jit_end: float = 0.0
     ok: bool = True
     payload: dict = field(default_factory=dict)
 
@@ -110,6 +127,11 @@ class Op:
         """CPU time of the process tree while the op ran."""
         return (self.cpu_end - self.cpu_start) * 1000.0
 
+    @property
+    def jit_ms(self) -> float:
+        """The part of :attr:`cpu_ms` the JVM's JIT compiler threads used."""
+        return (self.jit_end - self.jit_start) * 1000.0
+
 
 def timed_loop(ctx, seconds: float, work, cycle: int = 1) -> list[Op]:
     """Closed loop over ``work``, an iterator of ``(kind, step)``: call
@@ -120,12 +142,14 @@ def timed_loop(ctx, seconds: float, work, cycle: int = 1) -> list[Op]:
     tr = ctx.tracer
     tr.set_enabled(ctx.trace)
     ops: list[Op] = []
-    deadline = time.perf_counter() + seconds
+    ctx.mem.window(True)
+    t0 = time.perf_counter()
+    deadline = t0 + seconds
     while time.perf_counter() < deadline or len(ops) % cycle:
         kind, step = next(work)
         op = Op(len(ops), kind)
         tr.cost_s = 0.0
-        op.cpu_start = ctx.cpu_s()
+        op.cpu_start, op.jit_start = ctx.cpu_s()
         with tr.op(f"op-{op.index}"):
             op.start = time.perf_counter()
             try:
@@ -134,13 +158,27 @@ def timed_loop(ctx, seconds: float, work, cycle: int = 1) -> list[Op]:
                 op.ok = False
                 op.payload["error"] = f"{type(e).__name__}: {e}"
             op.end = time.perf_counter()
-        op.cpu_end = ctx.cpu_s()
+        op.cpu_end, op.jit_end = ctx.cpu_s()
         if ctx.trace:
             op.payload["trace_ms"] = tr.cost_s * 1000.0
             op.payload["cache_bytes"] = tr.cache_bytes()
         ops.append(op)
     tr.set_enabled(False)
+    ctx.phase_s["loop"] = time.perf_counter() - t0
+    ctx.mem.window(False)
     return ops
+
+
+def cost_metrics(ops: list[Op]) -> dict[str, float]:
+    """Cost per op, over all the run's ops: CPU time (bounded), the part
+    of it the JIT compilers used and the rest, and wall time (the last
+    three in ``info`` only)."""
+    return {
+        "cpu_ms_per_op": statistics.mean(o.cpu_ms for o in ops),
+        "jit_ms_per_op": statistics.mean(o.jit_ms for o in ops),
+        "work_cpu_ms_per_op": statistics.mean(o.cpu_ms - o.jit_ms for o in ops),
+        "wall_ms_per_op": statistics.mean(o.ms for o in ops),
+    }
 
 
 def layer_summary(ctx, ops: list[Op]) -> dict[str, float]:

@@ -48,8 +48,10 @@ WORKLOADS = ("serve", "curate")
 AB_KNOBS = ("SPARK_GRAFT_QOPT", "SPARK_GRAFT_SCAN_FANOUT", "SPARK_GRAFT_SHUFFLE_PARTITIONS")
 SETUP_REPEATS = 3
 DRIVER_MEM = "2g"
-#: no JVM perf-data file in /tmp: the run writes only inside the checkout
-JVM_OPTS = "-XX:-UsePerfData"
+#: no JVM perf-data file in /tmp: the run writes only inside the
+#: checkout; JIT compiler threads live as long as the JVM, so their CPU
+#: time can be read per op
+JVM_OPTS = "-XX:-UsePerfData -XX:-UseDynamicNumberOfCompilerThreads"
 
 
 def nproc() -> int:
@@ -75,18 +77,41 @@ def _tree_pids(root: int) -> list[int]:
     return out
 
 
-def tree_cpu_s(root: int | None = None) -> float:
+#: HotSpot's JIT compiler threads ("C1 CompilerThread0", ...), as the
+#: kernel truncates thread names
+JIT_THREADS = ("C1 CompilerThre", "C2 CompilerThre")
+
+
+def _jiffies(stat_path: str) -> int:
+    """user + system + reaped children's user + system, in clock ticks."""
+    with open(stat_path) as fh:
+        return sum(int(x) for x in fh.read().rsplit(")", 1)[1].split()[11:15])
+
+
+def tree_cpu_s(root: int | None = None) -> tuple[float, float]:
     """CPU seconds (user + system, reaped children included) used so far
-    by this process and all its descendants: the JVM, the Python workers.
-    Time the hypervisor gives to other guests (steal) is not in it."""
-    total = 0
+    by this process and all its descendants: the JVM, the Python
+    workers; and the part of it the JVM's JIT compiler threads used.
+    Time the hypervisor gives to other guests (steal) is in neither."""
+    total = jit = 0
     for pid in _tree_pids(root or os.getpid()):
         try:
-            with open(f"/proc/{pid}/stat") as fh:
-                total += sum(int(x) for x in fh.read().rsplit(")", 1)[1].split()[11:15])
+            total += _jiffies(f"/proc/{pid}/stat")
+            with open(f"/proc/{pid}/comm") as fh:
+                if fh.read().strip() != "java":
+                    continue
+            tids = os.listdir(f"/proc/{pid}/task")
         except (OSError, IndexError, ValueError):
             continue
-    return total / os.sysconf("SC_CLK_TCK")
+        for tid in tids:
+            try:
+                with open(f"/proc/{pid}/task/{tid}/comm") as fh:
+                    if fh.read().startswith(JIT_THREADS):
+                        jit += _jiffies(f"/proc/{pid}/task/{tid}/stat")
+            except (OSError, IndexError, ValueError):
+                continue
+    tick = os.sysconf("SC_CLK_TCK")
+    return total / tick, jit / tick
 
 
 def _memory_mb(pids: list[int]) -> tuple[float, float]:
@@ -128,19 +153,34 @@ def steal_share(before: list[int] | None, after: list[int] | None) -> float | No
 
 class MemorySampler:
     """Peak RSS and PSS of this process and all its descendants (the JVM
-    and Python workers), sampled every ``interval`` seconds."""
+    and Python workers), sampled every ``interval`` seconds: over the
+    whole run, and over the timed window only."""
 
     def __init__(self, interval: float = 0.25):
         self.interval = interval
         self.peak_rss = self.peak_pss = 0.0
+        self.window_rss = self.window_pss = 0.0
+        self.in_window = False
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._loop, daemon=True)
 
+    def sample(self) -> None:
+        rss, pss = _memory_mb(_tree_pids(os.getpid()))
+        self.peak_rss, self.peak_pss = max(self.peak_rss, rss), max(self.peak_pss, pss)
+        if self.in_window:
+            self.window_rss, self.window_pss = max(self.window_rss, rss), max(self.window_pss, pss)
+
     def _loop(self) -> None:
         while not self._stop.is_set():
-            rss, pss = _memory_mb(_tree_pids(os.getpid()))
-            self.peak_rss, self.peak_pss = max(self.peak_rss, rss), max(self.peak_pss, pss)
+            self.sample()
             self._stop.wait(self.interval)
+
+    def window(self, on: bool) -> None:
+        """Open or close the timed window, with a sample at each edge."""
+        if on:
+            self.in_window = True
+        self.sample()
+        self.in_window = on
 
     def start(self) -> None:
         self._thread.start()
@@ -172,20 +212,25 @@ def hygiene() -> dict:
 
 
 class Context:
-    """What a workload gets: the session, its inputs dir, the clock and
-    the tracer."""
+    """What a workload gets: the session, its inputs dir, the clock, the
+    memory sampler and the tracer."""
 
-    def __init__(self, spark, args, work: Path, tracer):
+    def __init__(self, spark, args, work: Path, tracer, mem: MemorySampler):
         self.spark = spark
         self.seed = args.seed
         self.seconds = args.seconds
         self.trace = bool(args.trace)
         self.work = work
         self.tracer = tracer
+        self.mem = mem
         self.cores = nproc()
         self.cpu_s = tree_cpu_s
         #: wall time of each catalog.load_table call, in ms
         self.load_ms: list[float] = []
+        #: wall seconds of the run's phases and of each set-up, for the
+        #: info line
+        self.phase_s: dict[str, float] = {}
+        self.setup_times_s: list[float] = []
 
     def reset_caches(self) -> None:
         """Drop every engine-side cache so the next set-up starts cold."""
@@ -197,15 +242,20 @@ class Context:
         self.spark.catalog.clearCache()
 
     def setup(self, fn):
-        """Run ``fn`` (cold set-up of the workload's inputs)
-        :data:`SETUP_REPEATS` times from cold caches; return its last
-        result and the median wall time in seconds."""
+        """Run ``fn`` (set-up of the workload's inputs)
+        :data:`SETUP_REPEATS` times, each after dropping the engine's
+        caches; return its last result and the median wall time in
+        seconds.  Only the first open is cold: the later ones find the
+        JVM compiled and the file system cached, as a server that
+        reopens its tables does."""
         times, out = [], None
         for _ in range(SETUP_REPEATS):
             self.reset_caches()
             t0 = time.perf_counter()
             out = fn()
             times.append(time.perf_counter() - t0)
+        self.phase_s["setup"] = sum(times)
+        self.setup_times_s = times
         return out, statistics.median(times)
 
 
@@ -289,6 +339,7 @@ def main(argv: list[str] | None = None) -> int:
     shutil.rmtree(work, ignore_errors=True)
     (work / "inputs").mkdir(parents=True)
 
+    t_start = time.perf_counter()
     cpu0 = _cpu_times()
     mem = MemorySampler()
     mem.start()
@@ -308,15 +359,20 @@ def main(argv: list[str] | None = None) -> int:
 
         info = hygiene()
         info["spark_version"] = pyspark.__version__
-        ctx = Context(spark, args, work, Tracer(spark))
+        ctx = Context(spark, args, work, Tracer(spark), mem)
+        ctx.phase_s["start"] = time.perf_counter() - t_start
+        t0 = time.perf_counter()
         res = workload.run(ctx, gen_box[0])
+        ctx.phase_s["workload"] = time.perf_counter() - t0
         mem.stop()
         if args.trace:
             ctx.tracer.write(str(work / "spans.json"))
     finally:
+        t0 = time.perf_counter()
         shutdown(spark)
+    ctx.phase_s["shutdown"] = time.perf_counter() - t0
 
-    res.e2e["peak_pss_mb"] = mem.peak_pss
+    res.e2e["peak_pss_mb"] = mem.window_pss
     info.update(
         workload=args.workload,
         seed=args.seed,
@@ -327,11 +383,16 @@ def main(argv: list[str] | None = None) -> int:
         error_rate=res.failed / res.attempted,
         cpu_steal_share=steal_share(cpu0, _cpu_times()),
         aliases={f"{args.workload}.{k}": v for k, v in res.aliases.items()},
+        e2e=res.e2e,
+        setup_times_s=ctx.setup_times_s,
+        phase_s=ctx.phase_s,
         checks=res.checks,
         notes=res.notes,
     )
-    info["aliases"]["peak_rss_mb"] = mem.peak_rss
-    info["aliases"]["peak_pss_mb"] = mem.peak_pss
+    info["aliases"]["peak_rss_mb"] = mem.window_rss
+    info["aliases"]["peak_pss_mb"] = mem.window_pss
+    info["aliases"]["run_peak_rss_mb"] = mem.peak_rss
+    info["aliases"]["run_peak_pss_mb"] = mem.peak_pss
     info["aliases"]["error_rate"] = info["error_rate"]
     units = json.loads((ROOT / "BENCHMARK.json").read_text())
     wanted = units["per_layer"] if args.trace else units["end_to_end"]

@@ -19,6 +19,7 @@ import pytest
 HERE = Path(__file__).resolve().parent
 ROOT = HERE.parent
 sys.path.insert(0, str(HERE))
+sys.path.insert(0, str(ROOT))
 
 import common  # noqa: E402
 import gen  # noqa: E402
@@ -58,6 +59,23 @@ def test_benchmark_json_matches_the_code():
     assert [w["name"] for w in BENCH["workloads"]] == ["serve", "curate"]
     assert {m["name"]: m["unit"] for m in BENCH["end_to_end"]} == common.END_TO_END
     assert {m["name"]: m["unit"] for m in BENCH["per_layer"]} == common.LAYER_METRICS
+
+
+def test_serve_requests_follow_their_action():
+    """Every endpoint of the mix has its CPU metric, and the requests of
+    one action share its parameters, as the client sends them."""
+    import wl_serve
+
+    assert {wl_serve.endpoint(s) for s in wl_serve.CYCLE} == set(common.SERVE_ENDPOINTS)
+    pools = wl_serve.make_pools(3)
+    for action, slots in wl_serve.ACTIONS:
+        assert len(pools[action]) == wl_serve.POOL
+        for entry in pools[action]:
+            assert set(entry) == set(slots)
+            if "facets" in slots:
+                assert entry["facets"]["fc"] is entry[slots[0]]["fc"]
+            if "suggest" in slots:
+                assert entry["suggest"]["search"] == entry[slots[0]]["search"]
 
 
 @pytest.mark.parametrize("workload", [w["name"] for w in BENCH["workloads"]])

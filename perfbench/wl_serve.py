@@ -1,9 +1,10 @@
 """``serve``: one client in a closed loop over the LEXam endpoints.
 
-The request mix repeats a fixed 10-request cycle of endpoints (see
-:data:`CYCLE`), so every seed sends the same share of each; the seed
-draws each request's parameters Zipf-style from a per-slot pool, so
-popular parameter sets repeat (the measured share is reported as
+The client repeats a fixed cycle of user actions (see :data:`ACTIONS`),
+each sending the requests the reference frontend sends for it, so every
+seed sends the same share of each endpoint; the seed draws each
+action's parameters Zipf-style from a per-action pool, so popular
+parameter sets repeat (the measured share is reported as
 ``serve.repeat_share``).  This path is driver-bound: plan construction
 and per-job overhead are a large part of every request.
 """
@@ -19,19 +20,29 @@ from concurrent.futures import ThreadPoolExecutor
 import numpy as np
 
 import gen
-from common import Result, layer_summary, median, quantile, timed_loop
+from common import SERVE_ENDPOINTS, Result, cost_metrics, layer_summary, median, quantile, timed_loop
 
-#: The fixed request cycle: 4 questions pages, 1 each of the other
-#: endpoints.  The two slowest (dashboard, stats) are a fifth of the
-#: requests and spread out, so p90 falls inside them and p50 inside the
-#: pages for any window length, instead of on a boundary between kinds.
-#: The four page slots fix the page's shape (search on/off, sort on a
-#: question or a variant column); the seed draws everything else.  So
-#: every seed sends the same mix of plan shapes.
-CYCLE = (
-    "page", "dashboard", "question", "page+search", "facets",
-    "stats", "page+vsort", "suggest", "compare", "page+search+vsort",
+#: The fixed cycle of user actions and the requests each one sends.
+#: Documented for the reference client (BASELINE.md, SURVEY.md section
+#: 6): a filter change refreshes the facets (150 ms debounce) next to
+#: reloading the questions page, and a search reloads the page after a
+#: 300 ms debounce.  Assumed, for want of a source: that a search also
+#: asks for its course suggestions and no facet refresh (the facet
+#: endpoint takes no search term); that a sort change reloads only the
+#: page; that opening an experiment asks for its stats and its judge
+#: comparison; and how often each action comes (each once a cycle, the
+#: filter change twice).  So the facets go with the filter changes, two
+#: of the four page loads.
+ACTIONS = (
+    ("filter", ("page", "facets")),
+    ("search", ("page+search", "suggest")),
+    ("sort", ("page+vsort",)),
+    ("refine", ("page+search+vsort", "facets")),
+    ("open", ("question",)),
+    ("dashboard", ("dashboard",)),
+    ("experiment", ("stats", "compare")),
 )
+CYCLE = tuple(slot for _, slots in ACTIONS for slot in slots)
 POOL = 40
 ZIPF_S = 1.2
 TABLES = ("questions", "variants", "answers", "judgments")
@@ -72,58 +83,75 @@ def _filter_config(rng: np.random.Generator) -> dict:
     return fc
 
 
-def make_pools(seed: int) -> dict[str, list[dict]]:
-    rng = np.random.default_rng([seed, 7])
+def _page(rng: np.random.Generator, slot: str) -> dict:
     from lexam_data_pipeline_spark.serving.questions import (
         QUESTION_SORT_COLUMNS,
         VARIANT_SORT_COLUMNS,
     )
 
-    pools: dict[str, list[dict]] = {k: [] for k in CYCLE}
-    n_q = gen.LEXAM["questions"]
-    q_rank = rng.permutation(n_q)
-    for _ in range(POOL):
-        for slot in CYCLE:
-            if slot.startswith("page"):
-                sorts = VARIANT_SORT_COLUMNS if "vsort" in slot else QUESTION_SORT_COLUMNS
-                pools[slot].append({
-                    "fc": _filter_config(rng),
-                    "search": str(rng.choice(gen.SEARCH_TERMS)) if "search" in slot else None,
-                    "sort_by": str(rng.choice(sorts)),
-                    "sort_dir": str(rng.choice(["asc", "desc"])),
-                    "offset": int(rng.choice([0, 0, 20, 50, 100])),
-                    "limit": int(rng.choice([20, 50])),
-                })
-        pools["facets"].append({"fc": _filter_config(rng)})
-        pools["question"].append({"id": f"q{int(q_rank[len(pools['question'])]):06d}"})
-        pools["suggest"].append({"search": str(rng.choice(gen.SEARCH_TERMS))})
-        configs = sorted(str(c) for c in rng.choice(gen.CONFIGS, size=int(rng.integers(1, 4)), replace=False))
-        pools["dashboard"].append({
-            "configs": configs if rng.random() < 0.7 else None,
-            "languages": [str(rng.choice(["de", "en"]))] if rng.random() < 0.3 else None,
-        })
-        pools["stats"].append({
-            "experiment_id": int(rng.integers(1, gen.LEXAM["experiments"] + 1)),
-            "model_name": "model-a" if rng.random() < 0.3 else None,
-            "judge_model": str(rng.choice(gen.JUDGES)) if rng.random() < 0.3 else None,
-        })
-        pools["compare"].append({"experiment_id": int(rng.integers(1, gen.LEXAM["experiments"] + 1))})
+    sorts = VARIANT_SORT_COLUMNS if "vsort" in slot else QUESTION_SORT_COLUMNS
+    return {
+        "fc": _filter_config(rng),
+        "search": str(rng.choice(gen.SEARCH_TERMS)) if "search" in slot else None,
+        "sort_by": str(rng.choice(sorts)),
+        "sort_dir": str(rng.choice(["asc", "desc"])),
+        "offset": int(rng.choice([0, 0, 20, 50, 100])),
+        "limit": int(rng.choice([20, 50])),
+    }
+
+
+def make_pools(seed: int) -> dict[str, list[dict[str, dict]]]:
+    """Per action, :data:`POOL` parameter sets: each maps the action's
+    request slots to their parameters.  Requests of one action share
+    them, as the client sends them: the facets of a filter change use
+    the page's filters, the suggestions of a search its term."""
+    rng = np.random.default_rng([seed, 7])
+    q_rank = rng.permutation(gen.LEXAM["questions"])
+    pools: dict[str, list[dict[str, dict]]] = {a: [] for a, _ in ACTIONS}
+    for i in range(POOL):
+        for action, slots in ACTIONS:
+            if slots[0].startswith("page"):
+                page = _page(rng, slots[0])
+                entry = {slots[0]: page}
+                if "facets" in slots:
+                    entry["facets"] = {"fc": page["fc"]}
+                if "suggest" in slots:
+                    entry["suggest"] = {"search": page["search"]}
+            elif action == "open":
+                entry = {"question": {"id": f"q{int(q_rank[i]):06d}"}}
+            elif action == "dashboard":
+                configs = sorted(str(c) for c in rng.choice(
+                    gen.CONFIGS, size=int(rng.integers(1, 4)), replace=False))
+                entry = {"dashboard": {
+                    "configs": configs if rng.random() < 0.7 else None,
+                    "languages": [str(rng.choice(["de", "en"]))] if rng.random() < 0.3 else None,
+                }}
+            else:
+                experiment_id = int(rng.integers(1, gen.LEXAM["experiments"] + 1))
+                entry = {
+                    "stats": {
+                        "experiment_id": experiment_id,
+                        "model_name": "model-a" if rng.random() < 0.3 else None,
+                        "judge_model": str(rng.choice(gen.JUDGES)) if rng.random() < 0.3 else None,
+                    },
+                    "compare": {"experiment_id": experiment_id},
+                }
+            pools[action].append(entry)
     return pools
 
 
 def request_stream(seed: int):
-    """Infinite (slot, pool index, params) sequence: the fixed cycle,
-    each request's pool entry drawn Zipf-style."""
+    """Infinite (slot, (action, pool index), params) sequence: the fixed
+    cycle of actions, each action's pool entry drawn Zipf-style."""
     pools = make_pools(seed)
     rng = np.random.default_rng([seed, 11])
     p = 1.0 / np.arange(1, POOL + 1) ** ZIPF_S
     p /= p.sum()
-    i = 0
     while True:
-        slot = CYCLE[i % len(CYCLE)]
-        idx = int(rng.choice(POOL, p=p))
-        yield slot, idx, pools[slot][idx]
-        i += 1
+        for action, slots in ACTIONS:
+            idx = int(rng.choice(POOL, p=p))
+            for slot in slots:
+                yield slot, (action, idx), pools[action][idx][slot]
 
 
 def endpoint(slot: str) -> str:
@@ -294,28 +322,29 @@ def run(ctx, generated: dict) -> Result:
     lexam_dir = str(ctx.work / "inputs" / "lexam")
     tables, setup_s = ctx.setup(lambda: load(ctx, lexam_dir))
     pools = make_pools(ctx.seed)
-    # one cycle before timing, concurrently: a cold request costs 2-3x a
-    # warm one, and a run that fits fewer cycles in its window must not
-    # measure colder requests than one that fits more
+    # one cycle before timing, concurrently to shorten the run: a cold
+    # request costs 2-3x a warm one, and a run that fits fewer cycles in
+    # its window must not measure colder requests than one that fits more
     t0 = time.perf_counter()
-    with ThreadPoolExecutor(max_workers=len(CYCLE)) as pool:
-        futures = [pool.submit(serve_one, ctx, tables, endpoint(s), pools[s][0]) for s in CYCLE]
+    warm = [(s, pools[a][0][s]) for a, slots in ACTIONS for s in slots]
+    with ThreadPoolExecutor(max_workers=len(warm)) as pool:
+        futures = [pool.submit(serve_one, ctx, tables, endpoint(s), params) for s, params in warm]
         for f in futures:
             f.result()
     warmup_s = time.perf_counter() - t0
 
     # a repeat is a request the server has answered before, warm-up included
-    seen = {(s, 0) for s in CYCLE}
+    seen = {(s, (a, 0)) for a, slots in ACTIONS for s in slots}
     repeats = 0
 
     def work():
         nonlocal repeats
-        for slot, idx, params in request_stream(ctx.seed):
-            repeats += (slot, idx) in seen
-            seen.add((slot, idx))
+        for slot, key, params in request_stream(ctx.seed):
+            repeats += (slot, key) in seen
+            seen.add((slot, key))
 
-            def step(op, idx=idx, params=params):
-                op.payload["idx"] = idx
+            def step(op, params=params):
+                op.payload["params"] = params
                 op.payload["response"] = serve_one(ctx, tables, endpoint(op.kind), params)
 
             yield slot, step
@@ -331,7 +360,7 @@ def run(ctx, generated: dict) -> Result:
     for op in ops:
         if not op.ok:
             continue
-        want = expected(con, endpoint(op.kind), pools[op.kind][op.payload["idx"]])
+        want = expected(con, endpoint(op.kind), op.payload["params"])
         if want is None:
             continue
         checked += 1
@@ -344,14 +373,17 @@ def run(ctx, generated: dict) -> Result:
     res = Result(attempted=len(ops), failed=sum(not o.ok for o in ops))
     res.checks = {"responses_match_duckdb": mismatched == 0, "checked_some": checked > 0}
     lat = [o.ms for o in ops]
-    res.e2e = {"setup_s": setup_s, "cpu_ms_per_op": statistics.mean(o.cpu_ms for o in ops)}
+    res.e2e = {"setup_s": setup_s, **cost_metrics(ops)}
     res.aliases = {
         "p50_ms": median(lat), "p90_ms": quantile(lat, 0.9), "requests": len(lat),
         "requests_per_s": len(lat) / (sum(lat) / 1000.0), "cpu_ms_per_request": res.e2e["cpu_ms_per_op"],
         "repeat_share": repeats / len(ops),
+        **{f"cpu_ms.{e}": statistics.mean(o.cpu_ms for o in ops if endpoint(o.kind) == e) for e in SERVE_ENDPOINTS},
     }
     res.layers = layer_summary(ctx, ops)
     res.layers["catalog.load_ms"] = median(ctx.load_ms)
+    for e in SERVE_ENDPOINTS:
+        res.layers[f"serving.cpu_ms.{e}"] = statistics.mean(o.cpu_ms for o in ops if endpoint(o.kind) == e)
     res.notes = {
         "requests": len(ops),
         "checked": checked,
